@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
-"""Spectral-index benchmark: build throughput, ANN serving latency and
-recall, with output checks on every run and an optional traced run.
+"""Spectral-index benchmark: λ and energy build throughput, set-up time,
+driver memory and recall, with output checks on every run (serving calls
+included) and an optional traced run.
 
-    python3 perfbench/run.py --workload build_default --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload build_default --seed 1 --seconds 30 --trace 0
 
 Run from the root of a checkout. The last line of stdout is one JSON
 object {"correct", "attempted", "failed", "metrics"}; with --trace 0 the
@@ -45,10 +46,17 @@ N_EXACT = 3
 LSH_PLANES = 10
 EDGE_RECALL_SAMPLE = 2000
 SETUP_REPEATS = 3
-# One serving cycle, always in this order, so the first (plan-compiling)
-# call of each kind sits at the same place in every run: the 50-query
-# call compiles the search_ann plans, and both 1-query calls run warm.
-CYCLE_OPS = ("ann_50q", "ann_1q", "exact_3q", "ann_1q")
+# One serving cycle, always in this order. Serving calls are checked and
+# traced, and their latencies are kept in the artifact, but they are no
+# end-to-end metric: a run has room for a few calls only, and their
+# summed time spread 0.21-0.24 of its median between runs; see README.
+CYCLE_OPS = ("ann_50q", "exact_3q", "ann_1q")
+# The engine modules whose first import in a fresh Python worker the
+# set-up pays, so that no timed call does.
+ENGINE_MODULES = ("pyarrowspace_spark.operators.energy", "pyarrowspace_spark.operators.knn",
+                  "pyarrowspace_spark.operators.lambda_index",
+                  "pyarrowspace_spark.operators.search",
+                  "pyarrowspace_spark.operators.simsearch")
 # build_small_driver sets spark.driver.maxResultSize to this multiple of
 # the corpus matrix bytes: above 0.8x the engine's collect_eligible()
 # gate refuses the driver tiers, while at or below 1.0x the seed engine
@@ -73,8 +81,7 @@ BLAS_VARS = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")
 END_TO_END_UNITS = {
     "setup_s": "s", "driver_peak_rss_gb": "GB",
     "lambda_build_items_per_s": "items/s", "energy_build_items_per_s": "items/s",
-    "edge_recall": "ratio", "ann_1q_p50_s": "s", "ann_1q_tail_s": "s",
-    "ann_50q_p50_s": "s", "exact_3q_p50_s": "s", "ann_recall_at_15": "ratio",
+    "edge_recall": "ratio", "ann_recall_at_15": "ratio",
 }
 
 
@@ -85,7 +92,7 @@ def parse_args(argv):
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--cores", type=int,
-                    help="run at local[CORES] instead of every CPU (the c2/c4 traced runs)")
+                    help="run at local[CORES] instead of every CPU but one (the c2/c4 traced runs)")
     ap.add_argument("--n", type=int, default=N_ITEMS,
                     help="corpus rows (smaller only for the self-test)")
     ap.add_argument("--corrupt", action="store_true",
@@ -94,15 +101,19 @@ def parse_args(argv):
 
 
 def host_fit() -> dict:
-    """Session sizing from this host: every CPU, one BLAS thread per
-    Python worker and a full-width pool on the driver, a quarter of RAM
-    for the driver JVM."""
+    """Session sizing from this host. Spark gets every CPU but one as
+    task slots; the one left runs the driver's Python and the JVM's own
+    threads, which at every CPU competed with the tasks and made short
+    calls vary between runs. Every Python process, the driver's too,
+    gets one BLAS thread, so compute threads do not outnumber CPUs. The
+    driver JVM gets a quarter of RAM."""
     cpus = len(os.sched_getaffinity(0))
     with open("/proc/meminfo") as fh:
         mem_kb = next(int(line.split()[1]) for line in fh
                       if line.startswith("MemTotal:"))
     mem_gb = mem_kb / 1024**2
-    return {"cpus": cpus, "driver_blas_threads": cpus, "worker_blas_threads": 1,
+    return {"cpus": cpus, "task_slots": max(1, cpus - 1),
+            "driver_blas_threads": 1, "worker_blas_threads": 1,
             "mem_total_gb": round(mem_gb, 1),
             "driver_memory": f"{max(1, min(8, int(mem_gb / 4)))}g"}
 
@@ -154,16 +165,6 @@ def host_probes(np, scratch: str) -> dict:
     return out
 
 
-def tail(samples: list) -> tuple[float, float, int]:
-    """(value, percentile, n): the highest percentile with at least ten
-    samples above it; the maximum when there are too few samples."""
-    s = sorted(samples)
-    n = len(s)
-    if n <= 10:
-        return s[-1], 100.0, n
-    return s[n - 11], 100.0 * (n - 10) / n, n
-
-
 def vm_hwm_gb(pid) -> float:
     with open(f"/proc/{pid}/status") as fh:
         kb = next(int(line.split()[1]) for line in fh if line.startswith("VmHWM:"))
@@ -204,7 +205,7 @@ class Bench:
         self.attempted = 0
         self.failures: list[str] = []
         self.samples: dict[str, list] = {k: [] for k in (
-            "session_setup_s", "lambda_build_s", "energy_build_s", "hash_s",
+            "session_setup_s", "worker_warmup_s", "lambda_build_s", "energy_build_s", "hash_s",
             "ann_1q_s", "ann_50q_s", "exact_3q_s")}
         self.quality: dict[str, float] = {}
         self.context: dict = {"plans": {}}
@@ -224,9 +225,14 @@ class Bench:
             "spark.local.dir": self.scratch,
             # -Xms = -Xmx: a heap that starts at full size does not grow
             # by GC-timing-dependent steps, which made the JVM's peak RSS
-            # vary by ±15% between identical runs.
+            # vary by ±15% between identical runs. AlwaysPreTouch: how
+            # much of that fixed heap the collector touched still
+            # depended on its timing (peak RSS fell in two modes 0.4 GB
+            # apart); touched at launch, it is a set-up cost, and peak
+            # RSS varies with what the driver holds.
             "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={self.scratch} "
-                                             f"-XX:-UsePerfData -Xms{self.host['driver_memory']}",
+                                             f"-XX:-UsePerfData -Xms{self.host['driver_memory']} "
+                                             "-XX:+AlwaysPreTouch",
             "spark.ui.retainedJobs": "100000",
             "spark.ui.retainedStages": "100000",
             **{f"spark.executorEnv.{v}": str(self.host["worker_blas_threads"])
@@ -242,6 +248,27 @@ class Bench:
         """Session start plus a warm-up job on every core."""
         t0 = time.perf_counter()
         self.start_session(cores).range(0, 64 * cores, numPartitions=cores).count()
+        return time.perf_counter() - t0
+
+    def warm_workers(self, cores: int) -> float:
+        """One job on every core that imports the engine in the core's
+        Python worker, a cost every new session pays once. Left to the
+        first build, it made that build's time vary by seconds between
+        runs."""
+        modules = ENGINE_MODULES
+
+        # nested, so that it is shipped by value: the Python workers
+        # cannot import this script
+        def import_engine(batches):
+            import importlib
+
+            for mod in modules:
+                importlib.import_module(mod)
+            yield from batches
+
+        t0 = time.perf_counter()
+        self.spark.range(0, cores, numPartitions=cores) \
+            .mapInPandas(import_engine, "id long").count()
         return time.perf_counter() - t0
 
     def shutdown(self) -> None:
@@ -369,10 +396,16 @@ class Bench:
         self.context["ann_tables"] = n_tables
         return hashed, planes
 
-    def serve(self, idx, hashed, planes, op_name: str, pick) -> None:
+    def serve(self, idx, hashed, planes, op_name: str) -> None:
+        """One serving call on seeded query rows, timed and checked."""
         from pyarrowspace_spark.operators import search
 
-        qi = list(pick)
+        if op_name == "ann_1q":
+            qi = list(self.rng.choice(N_QUERIES, size=1))
+        elif op_name == "exact_3q":
+            qi = list(self.rng.choice(N_QUERIES, size=N_EXACT, replace=False))
+        else:
+            qi = list(range(N_QUERIES))
         lf = idx.feature_laplacian
         with self.phase(op_name):
             if op_name == "exact_3q":
@@ -407,25 +440,6 @@ class Bench:
         for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
             out.setdefault(key(r["query_id"]), []).append([r["item_id"], r["score"]])
         return out
-
-    def warm_exact(self, idx) -> None:
-        """One untimed exact search. Its first call compiles the plans of
-        `search`, and that cost varies more than the call itself."""
-        from pyarrowspace_spark.operators import search
-
-        with self.tracer.paused() if self.tracer else nullcontext():
-            search.search(idx.items, idx.feature_laplacian, self.Q[:1], tau=TAU,
-                          k=TOP_K).collect()
-
-    def serve_cycle(self, idx, hashed, planes) -> None:
-        for op_name in CYCLE_OPS:
-            if op_name == "ann_1q":
-                pick = self.rng.choice(N_QUERIES, size=1)
-            elif op_name == "exact_3q":
-                pick = self.rng.choice(N_QUERIES, size=N_EXACT, replace=False)
-            else:
-                pick = range(N_QUERIES)
-            self.serve(idx, hashed, planes, op_name, pick)
 
     # ---- checks ---------------------------------------------------------
 
@@ -533,13 +547,15 @@ class Bench:
     # ---- the run ------------------------------------------------------
 
     def measure(self) -> dict:
-        """Set up, then the timed region: the λ and energy builds (once,
-        repeated while under --seconds), the hash, then serving cycles
-        until the region has lasted --seconds. Returns the end-to-end
-        metrics; with --trace 1 every layer is traced meanwhile."""
-        cores = self.args.cores or self.host["cpus"]
+        """Set up, then the timed region: one λ build and one energy
+        build, the hash, then serving cycles for the rest of --seconds.
+        A cycle starts only if it is expected to end within --seconds,
+        and at least one runs. Returns the end-to-end metrics; with
+        --trace 1 every layer is traced meanwhile."""
+        cores = self.args.cores or self.host["task_slots"]
         for _ in range(SETUP_REPEATS):
             self.samples["session_setup_s"].append(self.setup_session(cores))
+        self.samples["worker_warmup_s"].append(self.warm_workers(cores))
         if self.args.trace:
             import tracing
 
@@ -547,37 +563,28 @@ class Bench:
             self.tracer.install()
         try:
             t_end = time.perf_counter() + self.args.seconds
-            while True:
-                idx = self.lambda_build()
-                self.energy_build(idx)
-                if time.perf_counter() >= t_end:
-                    break
-                idx.items.unpersist()
-                idx.edges.unpersist()
+            idx = self.lambda_build()
+            self.energy_build(idx)
             hashed, planes = self.hash_index(idx)
-            self.warm_exact(idx)
             while True:
-                self.serve_cycle(idx, hashed, planes)
-                if time.perf_counter() >= t_end:
+                t0 = time.perf_counter()
+                for op_name in CYCLE_OPS:
+                    self.serve(idx, hashed, planes, op_name)
+                now = time.perf_counter()
+                if now + (now - t0) > t_end:
                     break
         finally:
             if self.tracer:
                 self.tracer.uninstall()
         s, med = self.samples, statistics.median
-        t_val, t_pct, t_n = tail(s["ann_1q_s"])
-        self.context["ann_1q_tail"] = {"percentile": t_pct, "samples": t_n}
         return {
-            # serving's one-off index set-up counts as set-up, as the
-            # session does
-            "setup_s": med(s["session_setup_s"]) + s["hash_s"][0],
+            # the workers' warm-up and serving's one-off index set-up
+            # count as set-up, as the session does
+            "setup_s": med(s["session_setup_s"]) + s["worker_warmup_s"][0] + s["hash_s"][0],
             "driver_peak_rss_gb": self.peak_rss_gb(),
-            "lambda_build_items_per_s": self.n / med(s["lambda_build_s"]),
-            "energy_build_items_per_s": self.n / med(s["energy_build_s"]),
+            "lambda_build_items_per_s": self.n / s["lambda_build_s"][0],
+            "energy_build_items_per_s": self.n / s["energy_build_s"][0],
             "edge_recall": self.quality["edge_recall"],
-            "ann_1q_p50_s": med(s["ann_1q_s"]),
-            "ann_1q_tail_s": t_val,
-            "ann_50q_p50_s": med(s["ann_50q_s"]),
-            "exact_3q_p50_s": med(s["exact_3q_s"]),
             "ann_recall_at_15": self.quality["ann_recall_at_15"],
         }
 

@@ -96,22 +96,9 @@ class Tracer:
         self._stack: list[Span] = []
         self._saved: list[tuple] = []
         self.absent: list[str] = []
-        self._paused = False
-
-    @contextmanager
-    def paused(self):
-        """Leave untimed warm-up calls out of the trace."""
-        self._paused = True
-        try:
-            yield
-        finally:
-            self._paused = False
 
     @contextmanager
     def span(self, name: str, kind: str = "layer"):
-        if self._paused:
-            yield None
-            return
         parent = self._stack[-1] if self._stack else None
         sp = Span(name, f"{self.tag}-{len(self.spans)}", parent, kind)
         self.spans.append(sp)
