@@ -15,13 +15,12 @@ no densification assumption.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 import numpy as np
 from pyspark.sql import DataFrame
+
+from . import spool
 
 
 def collect_id_matrix(
@@ -32,25 +31,6 @@ def collect_id_matrix(
     ids = pdf[id_col].to_numpy(dtype=np.int64)
     X = np.stack(pdf[feat_col].to_numpy()).astype(np.float64)
     return ids, X
-
-
-# Scratch dirs from matrix_to_frame, removed at interpreter exit. The
-# frames returned from them are lazy parquet scans, so the files must
-# outlive any point where Spark may (re)materialize the plan — session
-# lifetime is the only safe bound for a lazy handoff. Callers that can
-# tolerate an eager materialization pass `eager_release=True` instead:
-# the scan is absorbed into Spark-managed block storage
-# (localCheckpoint) and the files are deleted immediately, so repeated
-# handoffs in one session do not grow temp disk without bound.
-_SCRATCH_DIRS: list[str] = []
-
-
-def _cleanup_scratch() -> None:
-    for d in _SCRATCH_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_scratch)
 
 
 def driver_result_capacity(spark) -> int:
@@ -98,17 +78,14 @@ def handoff_eligible(spark, nbytes: int) -> bool:
     """Can a driver-resident matrix of `nbytes` be handed back to Spark
     without risking the pure-python fallback's boxed-row OOM refusal?
 
-    True when the scratch-parquet path is deployable (local master, or
-    an executor-shared scratch dir is configured) or the matrix is
-    small enough for the portable fallback. Callers choosing between a
-    driver tier and a distributed tier should check this BEFORE doing
-    driver-side work — an ineligible handoff means the distributed
-    plan, not a RuntimeError after the arithmetic is already done."""
-    if nbytes <= PURE_PYTHON_MAX_BYTES:
-        return True
-    if os.environ.get("SPARK_GRAFT_SCRATCH_DIR"):
-        return True
-    return spark.sparkContext.master.startswith("local")
+    True when the scratch-parquet path is deployable (`spool.scratch`)
+    or the matrix is small enough for the portable fallback. Callers
+    choosing between a driver tier and a distributed tier should check
+    this BEFORE doing driver-side work — an ineligible handoff means
+    the distributed plan, not a RuntimeError after the arithmetic is
+    already done."""
+    return (nbytes <= PURE_PYTHON_MAX_BYTES
+            or spool.scratch(spark) is not None)
 
 
 def matrix_to_frame(
@@ -128,11 +105,9 @@ def matrix_to_frame(
     handed to Spark as an ordinary distributed scan: splittable,
     column-pruned, identical under any session config.
 
-    Scratch location: `$SPARK_GRAFT_SCRATCH_DIR` if set, else the
-    system temp dir. On a multi-node cluster the scratch dir MUST be
-    storage the executors share (HDFS/NFS mount) — so under a
-    non-local master with no scratch dir configured the function does
-    NOT write a driver-local file the executors couldn't read; it
+    Scratch location: `spool.scratch` — on a multi-node cluster it MUST
+    be storage the executors share (HDFS/NFS mount), so where executors
+    cannot read it the function does NOT write a driver-local file; it
     takes the pure-python `createDataFrame` path instead (slower, but
     correct under any deployment and any session config). The same
     fallback catches a failed write.
@@ -154,13 +129,11 @@ def matrix_to_frame(
     X = np.ascontiguousarray(X, dtype=np.float64)
     n, f = X.shape
     schema = f"{id_col} long, {feat_col} array<double>"
-    base = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or None
-    master = spark.sparkContext.master
-    if base is None and not master.startswith("local"):
+    if spool.scratch(spark) is None:
         return _pure_python_frame(spark, ids, X, schema)
+    d = None
     try:
-        d = tempfile.mkdtemp(prefix="pyarrowspace-matrix-", dir=base)
-        _SCRATCH_DIRS.append(d)
+        d = spool.scratch_dir("pyarrowspace-matrix-")
         offsets = pa.array(np.arange(0, (n + 1) * f, f, dtype=np.int64),
                            type=pa.int64())
         feats = pa.LargeListArray.from_arrays(
@@ -172,10 +145,11 @@ def matrix_to_frame(
         out = spark.read.schema(schema).parquet(d)
         if eager_release:
             out = out.localCheckpoint(eager=True)
-            _SCRATCH_DIRS.remove(d)
-            shutil.rmtree(d, ignore_errors=True)
+            spool.release(d)
         return out
     except Exception:  # pragma: no cover - scratch dir unavailable
+        if d is not None:
+            spool.release(d)
         return _pure_python_frame(spark, ids, X, schema)
 
 
@@ -285,9 +259,12 @@ def sorted_index(ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def positions_of(
-    keys: np.ndarray, sorted_ids: np.ndarray, order: np.ndarray
+    keys: np.ndarray, sorted_ids: np.ndarray,
+    order: "np.ndarray | None" = None,
 ) -> np.ndarray:
-    """Row positions of `keys` in the original ids array (vectorized).
+    """Row positions of `keys` in the original ids array (vectorized);
+    with `order` None, positions in `sorted_ids` itself (an id-sorted
+    spool's row index).
 
     Raises KeyError on any key absent from the ids — without the check
     `searchsorted` silently gathers the wrong row (or IndexErrors only
@@ -301,4 +278,4 @@ def positions_of(
         raise KeyError(
             f"{missing.size} edge id(s) absent from the items array "
             f"(first few: {missing[:5].tolist()})")
-    return order[pos_c]
+    return pos_c if order is None else order[pos_c]

@@ -27,7 +27,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import time
 from dataclasses import dataclass
 
@@ -36,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import stats
+from ..functions import spool, stats
 from ..functions import matrix as matrix_mod
 from ..functions.matrix import (
     collect_id_matrix,
@@ -152,32 +151,8 @@ def _make_sum_kernel(fp32_msgs: bool, id_col: str):
     return _sum_kernel
 
 
-#: Row ceiling for the narrow-shuffle diffusion plan: the iterate
-#: spool is N·F float64 on the shared scratch (twice the λ-gather /
-#: LSH spool byte class, since the iterate must stay exact fp64).
-#: Beyond it the legacy array-message plan runs. Env override:
-#: SPARK_GRAFT_DIFFUSE_SPOOL_MAX_ROWS.
-DIFFUSE_SPOOL_MAX_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_DIFFUSE_SPOOL_MAX_ROWS", str(4_000_000)))
-
-# worker-side (pid-scoped) cache of the current step's X-spool mmap —
-# same single-entry policy as knn._WORKER_U_SPOOL_CACHE: each step's
-# spool path evicts the previous step's.
-_WORKER_X_SPOOL_CACHE: dict = {}
-
-
-def _load_x_spool(x_path: str, s_path: str):
-    key = (x_path, os.getpid())
-    ent = _WORKER_X_SPOOL_CACHE.get(key)
-    if ent is None:
-        ent = (np.load(x_path, mmap_mode="r"), np.load(s_path))
-        _WORKER_X_SPOOL_CACHE.clear()
-        _WORKER_X_SPOOL_CACHE[key] = ent
-    return ent
-
-
-def _make_spool_read_kernel(x_path: str, s_path: str, pos_path: str,
-                            n_chunks: int, id_col: str, feat_col: str):
+def _make_spool_read_kernel(x_path: str, pos_path: str, n_chunks: int,
+                            id_col: str, feat_col: str):
     """mapInPandas kernel over `spark.range(0, n_chunks, 1, n_chunks)`
     that emits the spool rows at the saved positions, chunk i taking
     the i-th contiguous slice — the distributed read-back of a
@@ -185,10 +160,7 @@ def _make_spool_read_kernel(x_path: str, s_path: str, pos_path: str,
     pages are still in cache, so this is a memory copy, not I/O)."""
 
     def kernel(batches):
-        import pandas as pd
-
-        X = np.load(x_path, mmap_mode="r")
-        s_ids = np.load(s_path)
+        X, s_ids = spool.open(x_path)
         pos = np.load(pos_path)
         per = -(-len(pos) // max(n_chunks, 1))
         for pdf in batches:
@@ -204,8 +176,7 @@ def _make_spool_read_kernel(x_path: str, s_path: str, pos_path: str,
     return kernel
 
 
-def _make_spool_write_kernel(x_path: str, s_path: str, id_col: str,
-                             feat_col: str):
+def _make_spool_write_kernel(x_path: str, id_col: str, feat_col: str):
     """mapInPandas kernel that scatters its rows of (id, features)
     into the pre-allocated id-sorted spool at `x_path` and emits only
     a per-partition row count. Single-host masters only (the writers
@@ -215,7 +186,8 @@ def _make_spool_write_kernel(x_path: str, s_path: str, id_col: str,
 
     def kernel(batches):
         X = np.load(x_path, mmap_mode="r+")
-        s_ids = np.load(s_path)
+        s_ids = np.load(os.path.join(os.path.dirname(x_path),
+                                     spool.IDS_FILE))
         wrote = 0
         for pdf in batches:
             if not len(pdf):
@@ -223,13 +195,7 @@ def _make_spool_write_kernel(x_path: str, s_path: str, id_col: str,
             bids = pdf[id_col].to_numpy(np.int64)
             vals = np.stack(pdf[feat_col].to_numpy()).astype(
                 np.float64, copy=False)
-            pos = np.searchsorted(s_ids, bids)
-            if (pos.max(initial=0) >= len(s_ids)
-                    or not np.array_equal(s_ids[pos], bids)):
-                raise RuntimeError(
-                    "diffusion seed spool: ids not covered by the "
-                    "collected id index")
-            X[pos] = vals
+            X[positions_of(bids, s_ids)] = vals
             wrote += len(bids)
         del X
         yield pd.DataFrame({"cnt": np.array([wrote], dtype=np.int64)})
@@ -237,8 +203,8 @@ def _make_spool_write_kernel(x_path: str, s_path: str, id_col: str,
     return kernel
 
 
-def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
-                            fp32_msgs: bool, id_col: str, feat_col: str,
+def _make_spool_step_kernel(x_path: str, eta: float, fp32_msgs: bool,
+                            id_col: str, feat_col: str,
                             out_path: "str | None" = None):
     """mapInPandas kernel for one narrow-shuffle diffusion step: the
     partition holds ALL incoming edges of its destinations (narrow
@@ -267,7 +233,7 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
             return
         pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(
             pdfs, ignore_index=True)
-        X, s_ids = _load_x_spool(x_path, s_path)
+        X, s_ids = spool.open(x_path)
         dstv = pdf["dst"].to_numpy(np.int64)
         # stable: preserves the sortWithinPartitions (dst, src) order,
         # so within-segment summation order is deterministic
@@ -277,18 +243,8 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
         w = pdf["weight"].to_numpy(np.float64)[order]
         udst, starts = np.unique(dstv, return_index=True)
         bounds = np.append(starts, len(dstv))
-        dpos = np.searchsorted(s_ids, udst)
-        if len(udst) and (dpos[-1] >= len(s_ids)
-                          or not np.array_equal(s_ids[dpos], udst)):
-            raise RuntimeError(
-                "diffusion X spool does not cover this partition's "
-                "destinations — stale spool or corpus mismatch")
-        spos = np.searchsorted(s_ids, srcv)
-        if len(srcv) and (spos.max(initial=0) >= len(s_ids)
-                          or not np.array_equal(s_ids[spos], srcv)):
-            raise RuntimeError(
-                "diffusion X spool does not cover this partition's "
-                "sources — stale spool or corpus mismatch")
+        dpos = positions_of(udst, s_ids)
+        spos = positions_of(srcv, s_ids)
         mdt = np.float32 if fp32_msgs else np.float64
         out = np.empty((len(udst), X.shape[1]))
         for i in range(len(udst)):
@@ -311,52 +267,18 @@ def _make_spool_step_kernel(x_path: str, s_path: str, eta: float,
     return kernel
 
 
-def _scatter_parquet_to_spool(files: "list[str]", idc: str, fc: str,
-                              s_ids: np.ndarray, fdim: int,
-                              x_path: str) -> int:
-    """Stream (id, array<double>) parquet files into an fp64 spool at
-    id-sorted positions (the diffusion twin of
-    lambda_index._stream_spool_from_parquet — but the ids here are
-    produced by our own kernel, so a mismatch RAISES instead of
-    falling back). Returns rows written."""
-    import pyarrow.parquet as pq
-
-    X = np.lib.format.open_memmap(
-        x_path, mode="w+", dtype=np.float64, shape=(len(s_ids), fdim))
-    total = 0
-    for f in files:
-        pf = pq.ParquetFile(f)
-        for batch in pf.iter_batches(batch_size=8192, columns=[idc, fc]):
-            bids = (batch.column(batch.schema.get_field_index(idc))
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.int64, copy=False))
-            fcol = batch.column(batch.schema.get_field_index(fc))
-            vals = fcol.flatten().to_numpy(zero_copy_only=False)
-            if vals.size != len(bids) * fdim:
-                raise RuntimeError("ragged diffusion step output")
-            pos = np.searchsorted(s_ids, bids)
-            if len(bids) and (pos.max(initial=0) >= len(s_ids)
-                              or not np.array_equal(s_ids[pos], bids)):
-                raise RuntimeError("diffusion step emitted unknown ids")
-            X[pos] = vals.reshape(len(bids), fdim)
-            total += len(bids)
-    X.flush()
-    del X
-    return total
-
-
 def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
                    steps: int, id_col: str, feat_col: str, nf: int,
                    n: int, msg_dtype: str,
                    step_times: "list[float] | None") -> DataFrame | None:
     """Narrow-shuffle distributed diffusion (guide §8: shuffle keys
-    and metadata, move heavy bytes once). Where a worker-visible
-    scratch filesystem exists — the same gate and probe as the
-    λ-gather mmap tier and the narrow-shuffle LSH plan — the iterate
-    X_t lives in ONE id-sorted fp64 spool per step, the loop-invariant
-    edge list is persisted pre-partitioned by dst, and each step is a
-    single exchange-free job: gather sources from the shared mmap,
-    emit updated destination rows, re-spool them for the next step.
+    and metadata, move heavy bytes once). Where executors can read the
+    scratch (`spool.scratch`, the rule the λ-gather mmap tier and the
+    narrow-shuffle LSH plan follow too), the iterate X_t lives in ONE
+    id-sorted fp64 spool per step, the loop-invariant edge list is
+    persisted pre-partitioned by dst, and each step is a single
+    exchange-free job: gather sources from the shared mmap, emit
+    updated destination rows, re-spool them for the next step.
 
     Per-step data movement is O(N·F) write + O(N·F) stream (plus
     page-cache gathers) instead of the legacy plan's E·F array-message
@@ -365,30 +287,20 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     (which needed feature-chunking to even fit a single-disk host; the
     spool plan never approaches the chunking budget).
 
-    Returns None when not eligible (no scratch, N above the spool
-    ceiling, scratch too full, duplicate ids, or
-    SPARK_GRAFT_DIFFUSE_PLAN=shuffle) — the caller runs the legacy
-    array-message plan, which remains the portable fallback."""
-    mode = os.environ.get("SPARK_GRAFT_DIFFUSE_PLAN", "auto").lower()
-    if mode in ("shuffle", "legacy", "vector"):
+    Returns None when not eligible (no worker-visible scratch, N above
+    spool.MAX_ROWS, scratch too full, or duplicate ids) — the caller
+    runs the legacy array-message plan, which remains the portable
+    fallback. A failed run frees its spools before the error
+    propagates."""
+    if n > spool.MAX_ROWS:
         return None
-    if n > DIFFUSE_SPOOL_MAX_ROWS:
-        return None
-    from .lambda_index import _probe_worker_visible, _spool_modes
-
     spark = items.sparkSession
-    scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    master_local = spark.sparkContext.master.startswith("local")
-    if scratch_env and not master_local:
-        mmap_ok = _probe_worker_visible(spark, scratch_env)
-    else:
-        mmap_ok = bool(scratch_env) or master_local
-    if not mmap_ok:
+    sc = spool.scratch(spark)
+    if sc is None:
         return None
     # budget: two live spools + one step parquet, all ~N·F·8
     try:
-        free = shutil.disk_usage(
-            scratch_env or tempfile.gettempdir()).free
+        free = shutil.disk_usage(sc.root).free
     except OSError:
         return None
     if free < 3 * n * nf * 8 + (64 << 20):
@@ -400,20 +312,8 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     s_ids = np.sort(ids_arr)
     if s_ids.size > 1 and np.any(s_ids[1:] == s_ids[:-1]):
         return None  # duplicate ids → scatter would corrupt rows
-    d = tempfile.mkdtemp(prefix="pyarrowspace-diffspool-",
-                         dir=scratch_env or None)
-    matrix_mod._SCRATCH_DIRS.append(d)
-    dmode, fmode = _spool_modes()
-    os.chmod(d, dmode)
-    s_path = os.path.join(d, "sids.npy")
-    np.save(s_path, s_ids)
-    os.chmod(s_path, fmode)
     schema = f"{id_col} long, {feat_col} array<double>"
     fp32_msgs = str(msg_dtype).lower() in ("float32", "fp32", "f32")
-
-    def _part_files(pdir: str) -> "list[str]":
-        return sorted(glob.glob(os.path.join(pdir, "part-*.parquet")))
-
     # Spool WRITE mode: on a single-host master (local / local-cluster)
     # the tasks scatter rows straight into the pre-allocated mmap —
     # writers and next-step readers share one page cache, so the whole
@@ -421,67 +321,52 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
     # driver I/O. On multi-host deployments mmap write coherence over
     # a shared filesystem is not guaranteed, so spools are built by
     # streaming a task-written parquet on the driver instead.
-    # Env override SPARK_GRAFT_DIFFUSE_SPOOL_WRITE=task|stream.
-    write_mode = os.environ.get(
-        "SPARK_GRAFT_DIFFUSE_SPOOL_WRITE", "auto").lower()
-    task_write = (write_mode == "task"
-                  or (write_mode == "auto" and master_local))
+    task_write = sc.single_host
 
-    def _prealloc(path: str) -> None:
-        sp = np.lib.format.open_memmap(
-            path, mode="w+", dtype=np.float64, shape=(n, nf))
-        del sp
-        os.chmod(path, fmode)
+    def _parquet(pdir: str) -> dict:
+        return {"files": sorted(glob.glob(os.path.join(
+                    pdir, "part-*.parquet"))),
+                "id_col": id_col, "feat_col": feat_col}
 
-    def _count_of(df: DataFrame) -> int:
-        row = df.agg(F.sum("cnt")).collect()[0][0]
-        return int(row or 0)
-
-    # ---- seed spool x0 (the initial iterate) ----
-    cur_path = os.path.join(d, "x0.npy")
-    if task_write:
-        _prealloc(cur_path)
-        wrote = _count_of(items.select(id_col, feat_col).mapInPandas(
-            _make_spool_write_kernel(cur_path, s_path, id_col, feat_col),
-            "cnt long"))
-        if wrote != n:
+    def _task_write(df: DataFrame, want: int, what: str) -> None:
+        wrote = int(df.agg(F.sum("cnt")).collect()[0][0] or 0)
+        if wrote != want:
             raise RuntimeError(
-                f"diffusion seed spool wrote {wrote} of {n} rows")
-    elif matrix_mod.collect_eligible(spark, n * nf * 8):
-        got_ids, X0 = collect_id_matrix(items, id_col, feat_col)
-        perm = np.argsort(got_ids, kind="stable")
-        sp = np.lib.format.open_memmap(
-            cur_path, mode="w+", dtype=np.float64, shape=(n, nf))
-        sp[:] = X0[perm]
-        sp.flush()
-        del sp, X0
-    else:
-        seed_dir = os.path.join(d, "seed")
-        items.select(id_col, feat_col).write.mode("overwrite").parquet(
-            seed_dir)
-        wrote = _scatter_parquet_to_spool(
-            _part_files(seed_dir), id_col, feat_col, s_ids, nf, cur_path)
-        if wrote != n:
-            raise RuntimeError(
-                f"diffusion seed spool wrote {wrote} of {n} rows")
-        shutil.rmtree(seed_dir, ignore_errors=True)
-    os.chmod(cur_path, fmode)
+                f"diffusion {what} spool wrote {wrote} of {want} rows")
 
-    # loop-invariant: symmetrized edges hash-partitioned by dst (every
-    # incoming edge of a dst in one partition) in deterministic
-    # (dst, src) order; persisted once, ZERO per-step exchange.
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    both = (_symmetrize(edges)
-            .repartition(n_part, "dst")
-            .sortWithinPartitions("dst", "src")
-            .persist())
+    d = spool.scratch_dir("pyarrowspace-diffspool-")
+    both = None
     try:
+        spool.save(os.path.join(d, spool.IDS_FILE), s_ids)
+        # ---- seed spool x0 (the initial iterate) ----
+        cur_path = os.path.join(d, "x0.npy")
+        if task_write:
+            spool.alloc(cur_path, n, nf)
+            _task_write(items.select(id_col, feat_col).mapInPandas(
+                _make_spool_write_kernel(cur_path, id_col, feat_col),
+                "cnt long"), n, "seed")
+        elif matrix_mod.collect_eligible(spark, n * nf * 8):
+            spool.write(cur_path, collect_id_matrix(items, id_col, feat_col),
+                        nf, ids=s_ids)
+        else:
+            seed_dir = os.path.join(d, "seed")
+            items.select(id_col, feat_col).write.mode("overwrite").parquet(
+                seed_dir)
+            spool.write(cur_path, _parquet(seed_dir), nf, ids=s_ids)
+            shutil.rmtree(seed_dir, ignore_errors=True)
+
+        # loop-invariant: symmetrized edges hash-partitioned by dst (every
+        # incoming edge of a dst in one partition) in deterministic
+        # (dst, src) order; persisted once, ZERO per-step exchange.
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        both = (_symmetrize(edges)
+                .repartition(n_part, "dst")
+                .sortWithinPartitions("dst", "src")
+                .persist())
         n_sym = both.count()
         if n_sym == 0:
             # no edges: diffusion is the identity
-            shutil.rmtree(d, ignore_errors=True)
-            if d in matrix_mod._SCRATCH_DIRS:
-                matrix_mod._SCRATCH_DIRS.remove(d)
+            spool.release(d)
             return items.select(id_col, feat_col)
         global _LAST_DIFFUSE_INFO
         _LAST_DIFFUSE_INFO = {"tier": "distributed", "plan": "spool",
@@ -498,8 +383,7 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
         # positions_of RAISES on a dst absent from items — the same
         # contract as the driver tier (ADVICE r5), instead of a
         # silently wrong searchsorted scatter
-        covered[positions_of(dst_arr, s_ids,
-                             np.arange(n, dtype=np.int64))] = True
+        covered[positions_of(dst_arr, s_ids)] = True
         iso_pos = np.where(~covered)[0]
         n_dst = int(covered.sum())
         if len(iso_pos):
@@ -517,19 +401,13 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
                 # ones are re-spooled by the driver below
                 step_dir = os.path.join(d, f"step{t + 1}")
                 kernel = _make_spool_step_kernel(
-                    cur_path, s_path, eta, fp32_msgs, id_col, feat_col)
+                    cur_path, eta, fp32_msgs, id_col, feat_col)
                 (both.mapInPandas(kernel, schema)
                  .write.mode("overwrite").parquet(step_dir))
                 if not last:
                     nxt_path = os.path.join(d, f"x{t + 1}.npy")
-                    wrote = _scatter_parquet_to_spool(
-                        _part_files(step_dir), id_col, feat_col, s_ids,
-                        nf, nxt_path)
-                    if wrote != n_dst:
-                        raise RuntimeError(
-                            f"diffusion step {t + 1} spool wrote "
-                            f"{wrote} of {n_dst} rows")
-                    os.chmod(nxt_path, fmode)
+                    spool.write(nxt_path, _parquet(step_dir), nf,
+                                ids=s_ids, rows=n_dst)
                     os.remove(cur_path)
                     shutil.rmtree(step_dir, ignore_errors=True)
                     cur_path = nxt_path
@@ -543,15 +421,12 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
                 # returned frame is now a chunked reader over the
                 # final spool (page-cache-warm from the writers).
                 nxt_path = os.path.join(d, f"x{t + 1}.npy")
-                _prealloc(nxt_path)
+                spool.alloc(nxt_path, n, nf)
                 kernel = _make_spool_step_kernel(
-                    cur_path, s_path, eta, fp32_msgs, id_col, feat_col,
+                    cur_path, eta, fp32_msgs, id_col, feat_col,
                     out_path=nxt_path)
-                wrote = _count_of(both.mapInPandas(kernel, "cnt long"))
-                if wrote != n_dst:
-                    raise RuntimeError(
-                        f"diffusion step {t + 1} spool wrote {wrote} "
-                        f"of {n_dst} rows")
+                _task_write(both.mapInPandas(kernel, "cnt long"), n_dst,
+                            f"step {t + 1}")
                 os.remove(cur_path)
                 cur_path = nxt_path
             if step_times is not None:
@@ -563,31 +438,31 @@ def _diffuse_spool(items: DataFrame, edges: DataFrame, eta: float,
             # until the scratch dir is reclaimed at exit — the same
             # lifetime the returned step parquet had.
             pos_path = os.path.join(d, "outpos.npy")
-            np.save(pos_path, np.where(covered)[0].astype(np.int64))
-            os.chmod(pos_path, fmode)
+            spool.save(pos_path, np.where(covered)[0].astype(np.int64))
             n_part_rd = max(1, min(n_part, n_dst))
             out = (spark.range(0, n_part_rd, 1, n_part_rd)
                    .mapInPandas(
                        _make_spool_read_kernel(
-                           cur_path, s_path, pos_path, n_part_rd,
-                           id_col, feat_col),
+                           cur_path, pos_path, n_part_rd, id_col,
+                           feat_col),
                        schema))
         else:
             # the final step's input spool and the id index are dead
             # now — only the final step parquet (the returned scan)
             # must outlive this call; reclaimed with the scratch dir.
-            for p in (cur_path, s_path):
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
+            spool.discard(cur_path)
+            spool.discard(os.path.join(d, spool.IDS_FILE))
             out = spark.read.schema(schema).parquet(step_dir)
         if len(iso_pos):
             out = out.unionAll(matrix_to_frame(
                 spark, iso_ids, iso_X, id_col, feat_col))
         return out
+    except BaseException:
+        spool.release(d)
+        raise
     finally:
-        both.unpersist()
+        if both is not None:
+            both.unpersist()
 
 
 def _diffusion_step_chunked(
@@ -889,15 +764,15 @@ def diffuse(items: DataFrame, edges: DataFrame, eta: float, steps: int,
       gather/segment-sum on the driver — the narrow edge list is a few
       % of X's size, so it fits whenever X does.
     - distributed tier beyond, two physical plans:
-      (a) narrow-shuffle spool plan (default wherever a worker-visible
-      scratch exists, `_diffuse_spool`): the iterate lives in one
+      (a) narrow-shuffle spool plan (wherever executors can read the
+      scratch, `spool.scratch`; `_diffuse_spool`): the iterate lives in one
       id-sorted fp64 spool per step, edges are persisted
       pre-partitioned by dst, and each step is a single exchange-free
       gather/update job — O(N·F) sequential I/O per step instead of an
       E·F message shuffle;
       (b) legacy array-message plan (`diffusion_step` per step,
-      lineage capped per step) — the portable fallback (no scratch, N
-      above the spool ceiling, or SPARK_GRAFT_DIFFUSE_PLAN=shuffle).
+      lineage capped per step) — the portable fallback (no
+      worker-visible scratch, or N above `spool.MAX_ROWS`).
 
     `step_times` (bench instrumentation, distributed tier only): pass a
     list and each step is materialized EAGERLY and its wall time

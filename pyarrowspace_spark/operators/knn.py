@@ -29,10 +29,10 @@ Two physical strategies, one logical contract:
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import shutil
-import tempfile
 import time
 import warnings
 
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..params import GraphParams
+from ..functions import spool
 from ..functions import vector as V
 
 # Set by the grouped LSH pair stage on each run: per-group pair-spool
@@ -74,31 +75,6 @@ LSH_PAIR_SPOOL_BYTES = 7.5
 #: on the driver covers every non-adversarial corpus to ~10^10 rows.
 LSH_CENSUS_COLLECT_MAX = 65536
 
-#: Row ceiling for the narrow-shuffle LSH plan (the unit-vector spool
-#: is N·F float32 on the shared scratch — the same ceiling class as
-#: the λ-gather's X spool). Beyond it the legacy vector-shuffle plan
-#: runs. Env override: SPARK_GRAFT_LSH_SPOOL_MAX_ROWS.
-LSH_SPOOL_MAX_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_LSH_SPOOL_MAX_ROWS", str(4_000_000)))
-
-# worker-side (pid-scoped) cache of the most recent U spool mmap: the
-# bucket kernel is called once per (band, key) group — thousands of
-# times per build — and re-reading sids.npy per call would re-page
-# ~N·8 B each time. One entry only; a new build's spool path evicts
-# the old.
-_WORKER_U_SPOOL_CACHE: dict = {}
-
-
-def _load_u_spool(u_path: str, s_path: str):
-    key = (u_path, os.getpid())
-    ent = _WORKER_U_SPOOL_CACHE.get(key)
-    if ent is None:
-        ent = (np.load(u_path, mmap_mode="r"), np.load(s_path))
-        _WORKER_U_SPOOL_CACHE.clear()
-        _WORKER_U_SPOOL_CACHE[key] = ent
-    return ent
-
-
 def _normalize_f32(X) -> np.ndarray:
     """EXACTLY the unit-normalization the hash pass applies (float32
     stack → float32 norms → divide): the spool and the per-batch
@@ -110,133 +86,32 @@ def _normalize_f32(X) -> np.ndarray:
     return X32 / norms[:, None]
 
 
-def _stream_u_spool_from_parquet(x_source: dict, n: int, fdim: int,
-                                 u_path: str):
-    """Stream the corpus parquet into an id-sorted float32 UNIT-vector
-    spool (the LSH twin of lambda_index._stream_spool_from_parquet —
-    same chunked scatter, plus the per-batch `_normalize_f32`).
-    Returns sorted ids on success, None on any mismatch."""
-    import pyarrow.parquet as pq
-
-    idc, fc = x_source["id_col"], x_source["feat_col"]
-    try:
-        ids_parts = []
-        for f in x_source["files"]:
-            ids_parts.append(
-                pq.read_table(f, columns=[idc])[idc]
-                .to_numpy(zero_copy_only=False))
-        ids_arr = np.concatenate(ids_parts).astype(np.int64, copy=False)
-        if len(ids_arr) != n:
-            return None
-        s_ids = np.sort(ids_arr)
-        if s_ids.size > 1 and np.any(s_ids[1:] == s_ids[:-1]):
-            return None
-        U = np.lib.format.open_memmap(
-            u_path, mode="w+", dtype=np.float32, shape=(n, fdim))
-        total = 0
-        for f in x_source["files"]:
-            pf = pq.ParquetFile(f)
-            for batch in pf.iter_batches(batch_size=16384,
-                                         columns=[idc, fc]):
-                bids = (batch.column(batch.schema.get_field_index(idc))
-                        .to_numpy(zero_copy_only=False)
-                        .astype(np.int64, copy=False))
-                fcol = batch.column(batch.schema.get_field_index(fc))
-                vals = fcol.flatten().to_numpy(zero_copy_only=False)
-                if vals.size != len(bids) * fdim:
-                    return None
-                pos = np.searchsorted(s_ids, bids)
-                U[pos] = _normalize_f32(vals.reshape(len(bids), fdim))
-                total += len(bids)
-        if total != n:
-            return None
-        U.flush()
-        del U
-        return s_ids
-    except Exception:
-        return None
-
-
 def _build_u_spool(items: DataFrame, id_col: str, feat_col: str,
-                   n: int, fdim: int,
-                   x_source: dict | None) -> "tuple[str, str] | None":
+                   n: int, fdim: int, x_source: dict | None,
+                   sc: "spool.Scratch | None") -> "str | None":
     """Create the id-sorted float32 unit-vector spool that lets the
     LSH pair stage shuffle NARROW (band, key, id) rows and gather
     vectors bucket-locally from one shared page-cache copy (guide §8:
-    shuffle keys, not payloads). None ⇒ caller uses the legacy
-    vector-shuffle plan (no worker-visible scratch, corpus too big to
-    spool, or SPARK_GRAFT_LSH_SHUFFLE=vector)."""
+    shuffle keys, not payloads); returns its path. None ⇒ caller uses
+    the portable vector-shuffle plan (no worker-visible scratch, or
+    corpus too big to spool or to collect)."""
     from ..functions import matrix as matrix_mod
-    from .lambda_index import _probe_worker_visible, _spool_modes
 
-    if os.environ.get("SPARK_GRAFT_LSH_SHUFFLE", "auto").lower() == "vector":
+    if sc is None or n > spool.MAX_ROWS:
         return None
-    if n > LSH_SPOOL_MAX_ROWS:
-        return None
-    spark = items.sparkSession
-    scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    master_local = spark.sparkContext.master.startswith("local")
-    if scratch_env and not master_local:
-        mmap_ok = _probe_worker_visible(spark, scratch_env)
-    else:
-        mmap_ok = bool(scratch_env) or master_local
-    if not mmap_ok:
-        return None
-    d = tempfile.mkdtemp(prefix="pyarrowspace-lshu-",
-                         dir=scratch_env or None)
-    matrix_mod._SCRATCH_DIRS.append(d)
+    d = spool.scratch_dir("pyarrowspace-lshu-")
     u_path = os.path.join(d, "u.npy")
-    s_ids = None
-    if x_source:
-        s_ids = _stream_u_spool_from_parquet(x_source, n, fdim, u_path)
-        if s_ids is None:
-            try:
-                os.remove(u_path)
-            except OSError:
-                pass
-    if s_ids is None:
-        if not matrix_mod.collect_eligible(spark, n * fdim * 8):
-            matrix_mod._SCRATCH_DIRS.remove(d)
-            shutil.rmtree(d, ignore_errors=True)
-            return None
-        ids_arr, X = matrix_mod.collect_id_matrix(items, id_col, feat_col)
-        perm = np.argsort(ids_arr, kind="stable")
-        s_ids = ids_arr[perm]
-        np.save(u_path, _normalize_f32(X[perm]))
-        del X
-    s_path = os.path.join(d, "sids.npy")
-    np.save(s_path, s_ids)
-    dmode, fmode = _spool_modes()
-    os.chmod(d, dmode)
-    for fn in os.listdir(d):
-        os.chmod(os.path.join(d, fn), fmode)
-    return u_path, s_path
-
-
-def _drop_u_spool(spool: "tuple[str, str] | None") -> None:
-    if not spool:
-        return
-    from ..functions import matrix as matrix_mod
-
-    d = os.path.dirname(spool[0])
-    shutil.rmtree(d, ignore_errors=True)
-    if d in matrix_mod._SCRATCH_DIRS:
-        matrix_mod._SCRATCH_DIRS.remove(d)
-
-
-def _scratch_probe_dir(spark) -> str:
-    """Filesystem the grouped build's disk budget must watch: where
-    shuffle/spill actually lands — $SPARK_GRAFT_SCRATCH_DIR, else the
-    session's spark.local.dir (first entry), else the tempdir."""
-    p = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    if not p:
-        try:
-            p = spark.conf.get("spark.local.dir")
-        except Exception:
-            p = None
-        p = (p or os.environ.get("SPARK_LOCAL_DIRS")
-             or tempfile.gettempdir()).split(",")[0].strip()
-    return p if os.path.isdir(p) else "/"
+    sources = [("scan", lambda: x_source)] if x_source else []
+    if matrix_mod.collect_eligible(items.sparkSession, n * fdim * 8):
+        sources.append(("collect", lambda: matrix_mod.collect_id_matrix(
+            items, id_col, feat_col)))
+    got = spool.write_first(u_path, sources, fdim, np.float32,
+                            _normalize_f32, rows=n)
+    if got is None:
+        spool.release(d)
+        return None
+    spool.save(os.path.join(d, spool.IDS_FILE), got[0])
+    return u_path
 
 
 def _dir_bytes(path: str) -> int:
@@ -599,11 +474,29 @@ def _pairwise_candidates_lsh(
     Shuffled vectors are float32: half the shuffle bytes; the distance
     error (~1e-7 relative) is far below any eps/ranking decision and
     the path is approximate by contract (recall ≥ 0.95, SURVEY §7.3 #2).
+
+    A failed build frees its scratch (unit-vector spool, pair spools,
+    hash cache) before the error propagates, not at interpreter exit.
     """
+    with contextlib.ExitStack() as on_error:
+        pairs = _lsh_pairs(items, id_col, feat_col, eps, k, n_bits,
+                           n_bands, seed, n_items, bucket_max, x_source,
+                           on_error)
+        on_error.pop_all()
+    return pairs
+
+
+def _lsh_pairs(items, id_col, feat_col, eps, k, n_bits, n_bands, seed,
+               n_items, bucket_max, x_source,
+               on_error: contextlib.ExitStack) -> DataFrame:
+    """`_pairwise_candidates_lsh`'s plan; every scratch resource it
+    creates registers its release on `on_error`."""
     import pandas as pd
     from pyspark.sql.types import (ArrayType, DoubleType, FloatType,
                                    IntegerType, LongType, StructField,
                                    StructType)
+
+    from ..functions.matrix import positions_of
 
     spark = items.sparkSession
     if n_items is None:
@@ -622,7 +515,7 @@ def _pairwise_candidates_lsh(
 
     # Narrow-shuffle plan (r13-opt, guide §8 "shuffle keys and
     # metadata instead of payloads"): where a worker-visible scratch
-    # exists and the corpus fits the spool ceiling, the unit vectors
+    # exists and the corpus fits spool.MAX_ROWS, the unit vectors
     # are spooled ONCE (id-sorted float32, one shared page-cache copy)
     # and the pair stage shuffles only (band, key, id) rows — ~28 B
     # instead of F·4+48 B per row (at N=2M, 39 bands: ~2.3 GB instead
@@ -632,9 +525,12 @@ def _pairwise_candidates_lsh(
     # the hash pass applies), so every emitted pair is unchanged.
     # `lsh_plan`'s band_shuffle_bytes continues to describe the
     # PORTABLE fallback plan (the oracle replays that formula).
+    sc = spool.scratch(spark)
     u_spool = _build_u_spool(items, id_col, feat_col, n_items, fdim,
-                             x_source)
+                             x_source, sc)
     narrow = u_spool is not None
+    if narrow:
+        on_error.callback(spool.release, os.path.dirname(u_spool))
 
     if narrow:
         hash_schema = StructType([
@@ -717,6 +613,7 @@ def _pairwise_candidates_lsh(
         # exactly ONCE per build (the legacy path re-hashes per band
         # group and runs a separate keys-only census pass).
         hashed = hashed.persist()
+        on_error.callback(hashed.unpersist)
 
     pair_schema = StructType([
         StructField("src", LongType(), False),
@@ -725,8 +622,6 @@ def _pairwise_candidates_lsh(
     ])
     eps_f = float(eps)
     k_i = int(k) if k is not None else 0
-
-    u_paths = u_spool if narrow else None
 
     def bucket_knn(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
@@ -747,17 +642,12 @@ def _pairwise_candidates_lsh(
         # identical.
         order0 = np.argsort(ids, kind="stable")
         ids = ids[order0]
-        if u_paths is not None:
+        if narrow:
             # narrow plan: gather this bucket's unit vectors from the
             # shared spool (ascending positions — the ids were just
             # sorted — so the mmap walk is monotonic)
-            Usp, s_l = _load_u_spool(*u_paths)
-            pos = np.searchsorted(s_l, ids)
-            if pos[-1] >= len(s_l) or not np.array_equal(s_l[pos], ids):
-                raise RuntimeError(
-                    "LSH U-spool does not cover this bucket's ids — "
-                    "stale spool or corpus mismatch")
-            U = np.asarray(Usp[pos])
+            Usp, s_l = spool.open(u_spool)
+            U = np.asarray(Usp[positions_of(ids, s_l)])
         else:
             U = np.stack(pdf["uvec"].to_numpy())[order0]
         out_s, out_d, out_v = [], [], []
@@ -823,10 +713,8 @@ def _pairwise_candidates_lsh(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.stack(pdf[feat_col].to_numpy()).astype(np.float32)
-            norms = np.linalg.norm(X, axis=1)
-            norms[norms == 0.0] = 1.0
-            U = X / norms[:, None]
+            U = _normalize_f32(
+                np.stack(pdf[feat_col].to_numpy()).astype(np.float32))
             signs = (U @ R) >= 0.0
             keys = signs.reshape(len(U), nb, bits).astype(np.int64) @ weights
             yield pd.DataFrame({
@@ -942,8 +830,6 @@ def _pairwise_candidates_lsh(
     if n_band_groups <= 1 and not narrow:
         bucket_pairs = _group_pairs(hashed)
     else:
-        from ..functions import matrix as matrix_mod
-
         # Group materialization is a PARQUET SPOOL, not localCheckpoint:
         # at N=1M one group's pre-dedupe pairs are ~125M rows, and the
         # checkpoint's MEMORY_AND_DISK unroll OOM'd a 16 GB heap
@@ -953,18 +839,15 @@ def _pairwise_candidates_lsh(
         # clean scan with NO lineage to the group's shuffle, so the GC
         # below actually reclaims the shuffle files. Spool dirs ride
         # the shared scratch-dir registry (cleaned at exit). Deployable
-        # wherever the matrix handoff is (local master or shared
-        # $SPARK_GRAFT_SCRATCH_DIR); elsewhere fall back to the
-        # eager checkpoint — a multi-JVM cluster has the aggregate
-        # memory the single-JVM harness lacks.
-        spool = matrix_mod.handoff_eligible(spark, 1 << 62)
-        scratch_base = os.environ.get("SPARK_GRAFT_SCRATCH_DIR") or None
+        # wherever executors can read the scratch (spool.scratch);
+        # elsewhere fall back to the eager checkpoint — a multi-JVM
+        # cluster has the aggregate memory the single-JVM harness lacks.
         parts = []
         # Per-group scratch accounting: per-group spool bytes, disk
         # free, wall time, and (UI reachable) per-stage metrics.
         global _LAST_LSH_GROUP_INFO
         _LAST_LSH_GROUP_INFO = []
-        if not spool:
+        if sc is None:
             # No shared scratch (multi-JVM cluster): eager checkpoints
             # ride aggregate executor memory/disk, which the single
             # local filesystem probe below can't see — keep the static
@@ -976,8 +859,8 @@ def _pairwise_candidates_lsh(
                                          schema=hash_schema)
                 ).localCheckpoint(eager=True))
                 spark.sparkContext._jvm.System.gc()
-            # (narrow mode never lands here: the U spool implies the
-            # shared-scratch condition `spool` tests)
+            # (narrow mode never lands here: the U spool implies a
+            # worker-visible scratch)
         else:
             # ADAPTIVE group sizing against the MEASURED disk. The
             # round-10 static model sized groups from each group's own
@@ -999,7 +882,7 @@ def _pairwise_candidates_lsh(
             # group size (tests force tiny budgets to pin the grouped
             # path; the 313k/800k anchors keep their committed plans
             # on a healthy disk).
-            probe = _scratch_probe_dir(spark)
+            probe = spool.spill_dir(spark)
             band_bytes = n_items * row_bytes
             est_k = k_i if k_i else 64
             # Spool projection UNIT: per GROUP when the per-src k-cap
@@ -1127,9 +1010,8 @@ def _pairwise_candidates_lsh(
                         .agg(F.min("dist").alias("dist"))
                         .withColumn("_rn", F.row_number().over(wg))
                         .filter(F.col("_rn") <= F.lit(k_i)).drop("_rn"))
-                d = tempfile.mkdtemp(prefix="pyarrowspace-lshpairs-",
-                                     dir=scratch_base)
-                matrix_mod._SCRATCH_DIRS.append(d)
+                d = spool.scratch_dir("pyarrowspace-lshpairs-")
+                on_error.callback(spool.release, d)
                 pairs_g.write.mode("overwrite").parquet(d)
                 parts.append(spark.read.parquet(d))
                 try:
@@ -1160,7 +1042,7 @@ def _pairwise_candidates_lsh(
             # cache and the U spool are dead; release both
             # deterministically instead of at session exit
             hashed.unpersist()
-            _drop_u_spool(u_spool)
+            spool.release(os.path.dirname(u_spool))
         bucket_pairs = parts[0]
         for p in parts[1:]:
             bucket_pairs = bucket_pairs.unionAll(p)

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..functions import spool
+
 # Up to this many rows the F×F Laplacian is assembled by broadcasting X
 # and gathering endpoint rows per edge partition (zero vector shuffle).
 # ~2M × 384 float64 = 6 GB broadcast — the executor-memory ceiling on
@@ -75,69 +77,6 @@ _LAST_GATHER_SPOOL = [None]
 # a growing corpus crosses LF_X_F32_MIN_ROWS and deserves the same
 # visibility)
 _WARNED_F32_AUTO = [False]
-
-# Spool permissions (ADVICE r12: 0o755/0o644 made the spooled corpus
-# matrix world-readable on a shared scratch filesystem). Default is
-# group-readable only; genuinely cross-user deployments where executors
-# run under a different primary group opt into other-read explicitly.
-def _spool_modes() -> tuple[int, int]:
-    if os.environ.get("SPARK_GRAFT_SCRATCH_WORLD_READABLE", "0") == "1":
-        return 0o755, 0o644
-    return 0o750, 0o640
-
-
-def _probe_worker_visible(spark, scratch_dir: str) -> bool:
-    """True iff executors can read files the driver writes under
-    `scratch_dir` — a tiny marker file verified by Spark tasks.
-    Auto ship-mode safety (ADVICE r11): a set $SPARK_GRAFT_SCRATCH_DIR
-    on a remote-executor master may be driver-local spooling space, and
-    trusting it blindly makes auto mode pick an impossible mmap plan
-    (loud FileNotFoundError mid-stage). The probe runs one task per
-    defaultParallelism slot and requires ALL to see the marker (ADVICE
-    r12: a single task can land on the one executor that mounts the
-    path). Best-effort, not a guarantee: task placement is the
-    scheduler's, so a heterogeneous cluster can still pass the probe
-    and fail mid-stage — that residual risk is why the broadcast
-    fallback stays selectable via SPARK_GRAFT_LF_SHIP=broadcast. Any
-    probe failure (unwritable dir, job error, any False) means 'not
-    visible' — the broadcast fallback is always legal."""
-    import tempfile as _tf
-    import uuid as _uuid
-
-    _, fmode = _spool_modes()
-    token = _uuid.uuid4().hex
-    try:
-        fd, marker = _tf.mkstemp(prefix="pyarrowspace-visprobe-",
-                                 suffix=".txt", dir=scratch_dir)
-        with os.fdopen(fd, "w") as fh:
-            fh.write(token)
-        os.chmod(marker, fmode)
-    except OSError:
-        return False
-    try:
-        def _check(it):
-            try:
-                with open(marker) as fh:
-                    ok = fh.read() == token
-            except OSError:
-                ok = False
-            for _ in it:
-                pass
-            yield ok
-
-        sc = spark.sparkContext
-        n_slots = max(2, int(sc.defaultParallelism))
-        got = sc.parallelize(range(n_slots), n_slots).mapPartitions(
-            _check).collect()
-        return bool(got) and all(got)
-    except Exception:
-        return False
-    finally:
-        try:
-            os.remove(marker)
-        except OSError:
-            pass
-
 
 _PLAN_ENTRY_RX = re.compile(
     r"^(\w+)#\d+\w*(?:\s+AS\s+(\w+)#\d+\w*)?$")
@@ -200,63 +139,6 @@ def parquet_scan_source(df: DataFrame, id_col: str,
         return None
     return {"files": files, "id_col": src_of.get(id_col, id_col),
             "feat_col": src_of.get(feat_col, feat_col)}
-
-
-def _stream_spool_from_parquet(x_source: dict, n: int, fdim: int,
-                               dtype, x_path: str):
-    """Write the gather spool `x_path` (.npy, id-SORTED row order) by
-    streaming the corpus parquet files chunk-by-chunk — driver peak
-    memory is one record batch instead of the collect path's full
-    N×F matrix plus its serialization transient. Returns
-    (sorted_ids, order=arange) on success, None on ANY mismatch
-    (row count, ragged vectors, duplicate ids, missing columns) — the
-    caller falls back to the collect path.
-
-    Sorted storage order is load-bearing for the gather stage: the
-    edge scan is sorted by src within partitions, so `X[si]` walks the
-    mmap monotonically instead of random-paging it (r12 verdict
-    finding 1: the λ gather was 33% of the flagship build and
-    page-in-bound)."""
-    import pyarrow.parquet as pq
-
-    idc, fc = x_source["id_col"], x_source["feat_col"]
-    try:
-        ids_parts = []
-        for f in x_source["files"]:
-            ids_parts.append(
-                pq.read_table(f, columns=[idc])[idc]
-                .to_numpy(zero_copy_only=False))
-        ids_arr = np.concatenate(ids_parts).astype(np.int64, copy=False)
-        if len(ids_arr) != n:
-            return None
-        s_ids = np.sort(ids_arr)
-        if s_ids.size > 1 and np.any(s_ids[1:] == s_ids[:-1]):
-            return None  # duplicate ids → scatter would corrupt rows
-        X = np.lib.format.open_memmap(
-            x_path, mode="w+", dtype=dtype, shape=(n, fdim))
-        total = 0
-        for f in x_source["files"]:
-            pf = pq.ParquetFile(f)
-            for batch in pf.iter_batches(batch_size=16384,
-                                         columns=[idc, fc]):
-                bids = (batch.column(batch.schema.get_field_index(idc))
-                        .to_numpy(zero_copy_only=False)
-                        .astype(np.int64, copy=False))
-                fcol = batch.column(batch.schema.get_field_index(fc))
-                vals = fcol.flatten().to_numpy(zero_copy_only=False)
-                if vals.size != len(bids) * fdim:
-                    return None  # ragged vectors
-                pos = np.searchsorted(s_ids, bids)
-                X[pos] = vals.reshape(len(bids), fdim).astype(
-                    dtype, copy=False)
-                total += len(bids)
-        if total != n:
-            return None
-        X.flush()
-        del X
-        return s_ids, np.arange(n, dtype=np.int64)
-    except Exception:
-        return None
 
 
 def feature_laplacian(
@@ -344,32 +226,8 @@ def feature_laplacian(
         return (lf + lf.T) / 2.0
 
     if n <= BROADCAST_GATHER_MAX_ROWS and x_fits:
-        import tempfile
-
         spark = items.sparkSession
         fdim = n_features
-        # mmap handoff where a worker-visible filesystem exists (same
-        # deployability rule as matrix_to_frame's scratch parquet):
-        # one page-cache copy shared by every worker instead of
-        # per-worker broadcast copies — the N=2M gather OOM-killed the
-        # host with 5 workers at 10-17 GB RSS each over a 6.1 GB X.
-        from ..functions import matrix as matrix_mod
-
-        scratch_env = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-        ship = os.environ.get("SPARK_GRAFT_LF_SHIP", "auto").lower()
-        master_local = spark.sparkContext.master.startswith("local")
-        if ship == "mmap":
-            mmap_ok = True
-        elif ship == "broadcast":
-            mmap_ok = False
-        elif scratch_env and not master_local:
-            # auto + remote executors: a set scratch var is NOT proof
-            # the path is worker-visible (it may exist for driver-side
-            # spooling only — ADVICE r11). Probe with a marker file
-            # read by one task; broadcast is the safe fallback.
-            mmap_ok = _probe_worker_visible(spark, scratch_env)
-        else:
-            mmap_ok = bool(scratch_env) or master_local
         # fp32 X ship at scale (see LF_X_F32_MIN_ROWS): halves the
         # page-in/broadcast bytes of the gather stage; partials still
         # accumulate in fp64.
@@ -394,171 +252,132 @@ def feature_laplacian(
                     f"SPARK_GRAFT_LF_X_DTYPE=float64 to opt out)",
                     UserWarning, stacklevel=2)
         x_dtype = np.float32 if ship_f32 else np.float64
-        b_X = b_idx = None
-        x_path = None
-        if mmap_ok:
-            d = tempfile.mkdtemp(prefix="pyarrowspace-lfx-",
-                                 dir=scratch_env or None)
-            matrix_mod._SCRATCH_DIRS.append(d)
-            x_path = os.path.join(d, "x.npy")
-            # Spool source: stream the corpus parquet directly when the
-            # builder proved the items plan is a trivial scan (skips
-            # the Spark collect's full-N JVM serialization pass and its
-            # ~3× driver transient); else collect. Both store X in
-            # id-SORTED row order so the sorted edge scan's gathers
-            # walk the mmap monotonically. SPARK_GRAFT_LF_X_SOURCE=
-            # collect forces the old path (A/B lever).
-            src_mode = os.environ.get("SPARK_GRAFT_LF_X_SOURCE",
-                                      "auto").lower()
-            s_ids = order = None
-            if x_matrix is not None:
-                # driver-resident handoff (already id-sorted): spool
-                # it directly — no collect, no parquet re-read
-                s_ids = x_matrix[0]
-                order = np.arange(n, dtype=np.int64)
-                np.save(x_path, x_matrix[1].astype(x_dtype, copy=False))
-                _LAST_GATHER_SPOOL[0] = "matrix"
-            elif x_source and src_mode != "collect":
-                res = _stream_spool_from_parquet(
-                    x_source, n, fdim, x_dtype, x_path)
-                if res is not None:
-                    s_ids, order = res
-                    _LAST_GATHER_SPOOL[0] = "scan"
+        b_X = d = x_path = None
+        try:
+            # mmap handoff wherever executors can read the scratch
+            # (spool.scratch): one page-cache copy shared by every
+            # worker instead of per-worker broadcast copies — the N=2M
+            # gather OOM-killed the host with 5 workers at 10-17 GB RSS
+            # each over a 6.1 GB X.
+            if spool.scratch(spark) is not None:
+                d = spool.scratch_dir("pyarrowspace-lfx-")
+                x_path = os.path.join(d, "x.npy")
+                # Spool source: the driver-resident handoff as is; else
+                # stream the corpus parquet when the builder proved the
+                # items plan is a trivial scan (skips the Spark
+                # collect's full-N JVM serialization pass and its ~3×
+                # driver transient); else collect. The spool is
+                # id-SORTED so the sorted edge scan's gathers walk it
+                # monotonically.
+                if x_matrix is not None:
+                    sources = [("matrix", lambda: x_matrix)]
                 else:
-                    try:
-                        os.remove(x_path)
-                    except OSError:
-                        pass
-            if s_ids is None:
-                _LAST_GATHER_SPOOL[0] = "collect"
-                ids_arr, X = collect_id_matrix(items, id_col, feat_col)
+                    sources = [("scan", lambda: x_source)] if x_source else []
+                    sources.append(("collect", lambda: collect_id_matrix(
+                        items, id_col, feat_col)))
+                got = spool.write_first(x_path, sources, fdim, x_dtype,
+                                        rows=n)
+                if got is None:
+                    # duplicate ids: the broadcast plan gathers as ever
+                    spool.release(d)
+                    d = x_path = None
+                else:
+                    s_ids, _LAST_GATHER_SPOOL[0] = got
+                    spool.save(os.path.join(d, spool.IDS_FILE), s_ids)
+            if x_path is None:
+                _LAST_GATHER_SPOOL[0] = "broadcast"
+                ids_arr, X = (x_matrix if x_matrix is not None else
+                              collect_id_matrix(items, id_col, feat_col))
                 perm = np.argsort(ids_arr, kind="stable")
                 s_ids = ids_arr[perm]
-                order = np.arange(n, dtype=np.int64)
-                np.save(x_path, X[perm].astype(x_dtype, copy=False))
-                # the driver's own copy is dead weight for the rest of
-                # the job (the result is F×F); at N=2M it was 6.1 GB of
-                # the 125 GB the OOM killer arbitrated
-                del X
-            np.save(os.path.join(d, "sids.npy"), s_ids)
-            np.save(os.path.join(d, "order.npy"), order)
-            # tempfile.mkdtemp creates mode 0700 — unreadable by
-            # executors running as a DIFFERENT user on a genuinely
-            # shared scratch filesystem (ADVICE r11). Group-read by
-            # default; other-read only behind the explicit
-            # SPARK_GRAFT_SCRATCH_WORLD_READABLE opt-in (ADVICE r12:
-            # the spool holds corpus embeddings — don't expose them to
-            # every local user on a shared filesystem).
-            dmode, fmode = _spool_modes()
-            os.chmod(d, dmode)
-            for fn in os.listdir(d):
-                os.chmod(os.path.join(d, fn), fmode)
-            x_bytes = n * fdim * x_dtype().itemsize
-        else:
-            _LAST_GATHER_SPOOL[0] = "broadcast"
-            if x_matrix is not None:
-                ids_arr, X = x_matrix
-                perm = np.arange(n, dtype=np.int64)
-            else:
-                ids_arr, X = collect_id_matrix(items, id_col, feat_col)
-                perm = np.argsort(ids_arr, kind="stable")
-            s_ids = ids_arr[perm]
-            order = np.arange(n, dtype=np.int64)
-            X = X[perm].astype(x_dtype, copy=False)
-            b_X = spark.sparkContext.broadcast(X)
-            b_idx = spark.sparkContext.broadcast((s_ids, order))
-            x_bytes = X.nbytes
+                X = X[perm].astype(x_dtype, copy=False)
+                b_X = spark.sparkContext.broadcast((X, s_ids))
 
-        def edge_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            if x_path is not None:
-                Xl = np.load(x_path, mmap_mode="r")
-                s_l = np.load(os.path.join(
-                    os.path.dirname(x_path), "sids.npy"))
-                ord_l = np.load(os.path.join(
-                    os.path.dirname(x_path), "order.npy"))
-            else:
-                Xl = b_X.value
-                s_l, ord_l = b_idx.value
-            acc = np.zeros((fdim, fdim), dtype=np.float64)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                si = positions_of(pdf["src"].to_numpy(dtype=np.int64),
-                                  s_l, ord_l)
-                di = positions_of(pdf["dst"].to_numpy(dtype=np.int64),
-                                  s_l, ord_l)
-                w = pdf["weight"].to_numpy(dtype=np.float64)
-                C = (Xl[si] * w[:, None]).T @ Xl[di]
-                acc -= C + C.T
-            yield pd.DataFrame({"partial": acc.ravel()})
+            def edge_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                if x_path is not None:
+                    Xl, s_l = spool.open(x_path)
+                else:
+                    Xl, s_l = b_X.value
+                acc = np.zeros((fdim, fdim), dtype=np.float64)
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    si = positions_of(pdf["src"].to_numpy(dtype=np.int64),
+                                      s_l)
+                    di = positions_of(pdf["dst"].to_numpy(dtype=np.int64),
+                                      s_l)
+                    w = pdf["weight"].to_numpy(dtype=np.float64)
+                    C = (Xl[si] * w[:, None]).T @ Xl[di]
+                    acc -= C + C.T
+                yield pd.DataFrame({"partial": acc.ravel()})
 
-        schema = StructType([StructField("partial", DoubleType(), False)])
-        e_scan = edges.select("src", "dst", "weight")
-        # Sort each edge partition by src before the gather: X is
-        # stored id-sorted, so sorted src batches make the X[si]
-        # gather walk the spool monotonically (sequential page-ins /
-        # cache lines) instead of random-paging it — the gather stage
-        # was 33% of the r12 flagship build and page-in-bound. A local
-        # sort only (no exchange); changes partial summation order, so
-        # L_F moves ~1 ulp — within every pinned tolerance.
-        if os.environ.get("SPARK_GRAFT_LF_GATHER_SORT", "1") != "0":
-            e_scan = e_scan.sortWithinPartitions("src")
-        # Diagonal term Σ deg_i·x_i x_iᵀ: ONE driver gemm over the
-        # spool, not a per-partition fold (r13-opt; guide §1.2 "the
-        # distributed algorithm first"). The old edge_partials
-        # accumulated the degree-weighted diagonal inside EVERY task —
-        # each partition touches nearly all N rows of a connected
-        # graph, so total diagonal work was P·N·F² (736 GFLOP at the
-        # 78k bench vs 354 GFLOP for the edge term it rode along with,
-        # and growing with the partition count). Degrees come from one
-        # map-side-combined SQL aggregate (2E narrow rows, tiny);
-        # the driver gemm is N·F² once, chunked to bound the fp64
-        # upcast transient, at full driver BLAS width. Only the
-        # floating-point summation ORDER changes (~1 ulp on L_F),
-        # within every pinned tolerance — same class as the existing
-        # sortWithinPartitions note above.
-        deg_pdf = (
-            edges.select(F.col("src").alias("_n"), "weight")
-            .unionAll(edges.select(F.col("dst").alias("_n"), "weight"))
-            .groupBy("_n").agg(F.sum("weight").alias("_d"))
-        ).toPandas()
-        deg_vec = np.zeros(n, dtype=np.float64)
-        if len(deg_pdf):
-            dpos = positions_of(deg_pdf["_n"].to_numpy(dtype=np.int64),
-                                s_ids, order)
-            deg_vec[dpos] = deg_pdf["_d"].to_numpy(dtype=np.float64)
-        X_diag = (np.load(x_path, mmap_mode="r") if x_path is not None
-                  else b_X.value)
-        diag = np.zeros((fdim, fdim), dtype=np.float64)
-        for t0 in range(0, n, 65536):
-            Xt = np.asarray(X_diag[t0:t0 + 65536], dtype=np.float64)
-            diag += (Xt * deg_vec[t0:t0 + 65536, None]).T @ Xt
-        del X_diag
-        if x_path is None:
-            # Broadcast fallback (no worker-visible scratch): every
-            # Python worker unpickles its OWN copy of X, and the real
-            # per-worker footprint is ~3x X_bytes (measured at N=2M:
-            # 10-17 GB RSS per worker over a 6.1 GB X — the unpickled
-            # value plus the pickle-bytes transient), which OOM-killed
-            # the 125 GB host at 5 workers alongside the 51 GB JVM.
-            # Coalesce the edge scan so the copies stay inside a
-            # budget; the per-partition gemm work just gets bigger,
-            # which BLAS prefers anyway. Bound by the scan's ACTUAL
-            # partition count, not defaultParallelism (a session-start
-            # snapshot that dynamic allocation can outgrow).
-            # Suffix-aware parse ("32g" works, like the sibling
-            # SPARK_GRAFT_MAX_RESULT/DRIVER_MEM vars); bare ints are
-            # bytes. The mmap path needs none of this: one page-cache
-            # copy, full scan parallelism.
-            from ..functions.matrix import parse_size_bytes
+            schema = StructType([StructField("partial", DoubleType(), False)])
+            # Sort each edge partition by src before the gather: X is
+            # stored id-sorted, so sorted src batches make the X[si]
+            # gather walk the spool monotonically (sequential page-ins /
+            # cache lines) instead of random-paging it — the gather
+            # stage was 33% of the r12 flagship build and page-in-bound.
+            # A local sort only (no exchange); changes partial
+            # summation order, so L_F moves ~1 ulp — within every
+            # pinned tolerance.
+            e_scan = edges.select("src", "dst", "weight").sortWithinPartitions(
+                "src")
+            # Diagonal term Σ deg_i·x_i x_iᵀ: ONE driver gemm over the
+            # spool, not a per-partition fold (r13-opt; guide §1.2 "the
+            # distributed algorithm first"). The old edge_partials
+            # accumulated the degree-weighted diagonal inside EVERY
+            # task — each partition touches nearly all N rows of a
+            # connected graph, so total diagonal work was P·N·F² (736
+            # GFLOP at the 78k bench vs 354 GFLOP for the edge term it
+            # rode along with, and growing with the partition count).
+            # Degrees come from one map-side-combined SQL aggregate (2E
+            # narrow rows, tiny); the driver gemm is N·F² once, chunked
+            # to bound the fp64 upcast transient, at full driver BLAS
+            # width. Only the floating-point summation ORDER changes
+            # (~1 ulp on L_F), within every pinned tolerance — same
+            # class as the sortWithinPartitions note above.
+            deg_pdf = (
+                edges.select(F.col("src").alias("_n"), "weight")
+                .unionAll(edges.select(F.col("dst").alias("_n"), "weight"))
+                .groupBy("_n").agg(F.sum("weight").alias("_d"))
+            ).toPandas()
+            deg_vec = np.zeros(n, dtype=np.float64)
+            if len(deg_pdf):
+                dpos = positions_of(deg_pdf["_n"].to_numpy(dtype=np.int64),
+                                    s_ids)
+                deg_vec[dpos] = deg_pdf["_d"].to_numpy(dtype=np.float64)
+            X_diag = (np.load(x_path, mmap_mode="r") if x_path is not None
+                      else X)
+            diag = np.zeros((fdim, fdim), dtype=np.float64)
+            for t0 in range(0, n, 65536):
+                Xt = np.asarray(X_diag[t0:t0 + 65536], dtype=np.float64)
+                diag += (Xt * deg_vec[t0:t0 + 65536, None]).T @ Xt
+            del X_diag
+            if x_path is None:
+                # Broadcast fallback (no worker-visible scratch): every
+                # Python worker unpickles its OWN copy of X, and the
+                # real per-worker footprint is ~3x X_bytes (measured at
+                # N=2M: 10-17 GB RSS per worker over a 6.1 GB X — the
+                # unpickled value plus the pickle-bytes transient),
+                # which OOM-killed the 125 GB host at 5 workers
+                # alongside the 51 GB JVM. Coalesce the edge scan so
+                # the copies stay inside a budget; the per-partition
+                # gemm work just gets bigger, which BLAS prefers anyway.
+                # Bound by the scan's ACTUAL partition count, not
+                # defaultParallelism (a session-start snapshot that
+                # dynamic allocation can outgrow). Suffix-aware parse
+                # ("32g" works, like the sibling
+                # SPARK_GRAFT_MAX_RESULT/DRIVER_MEM vars); bare ints are
+                # bytes. The mmap path needs none of this: one
+                # page-cache copy, full scan parallelism.
+                from ..functions.matrix import parse_size_bytes
 
-            budget = parse_size_bytes(
-                os.environ.get("SPARK_GRAFT_GATHER_MEM", str(32 << 30)),
-                default=32 << 30)
-            max_workers = max(2, int(budget // max(3 * x_bytes, 1)))
-            if e_scan.rdd.getNumPartitions() > max_workers:
-                e_scan = e_scan.coalesce(max_workers)
-        try:
+                budget = parse_size_bytes(
+                    os.environ.get("SPARK_GRAFT_GATHER_MEM", str(32 << 30)),
+                    default=32 << 30)
+                max_workers = max(2, int(budget // max(3 * X.nbytes, 1)))
+                if e_scan.rdd.getNumPartitions() > max_workers:
+                    e_scan = e_scan.coalesce(max_workers)
             # Arrow fetch, not .collect(): the result is P×F² scalar
             # rows (32×147,456 = 4.7M at F=384) and the row path paid
             # ~27 s of driver pickle.loads + Row construction per build
@@ -570,21 +389,16 @@ def feature_laplacian(
             parts_pdf = e_scan.mapInPandas(
                 edge_partials, schema=schema).toPandas()
         finally:
-            # free the JVM/disk/worker copies eagerly — the tier is
-            # done. The .npy spool dies HERE, not at session exit
-            # (toPandas() is eager, so unlike matrix_to_frame's lazy
-            # scans nothing can re-read it; leaving it would stack a
-            # 6 GB corpse per build on the scratch disk).
+            # free the JVM/disk/worker copies eagerly, on error too —
+            # the tier is done. The .npy spool dies HERE, not at
+            # session exit (toPandas() is eager, so unlike
+            # matrix_to_frame's lazy scans nothing can re-read it;
+            # leaving it would stack a 6 GB corpse per build on the
+            # scratch disk).
             if b_X is not None:
                 b_X.destroy()
-                b_idx.destroy()
-            if x_path is not None:
-                import shutil as _shutil
-
-                d = os.path.dirname(x_path)
-                _shutil.rmtree(d, ignore_errors=True)
-                if d in matrix_mod._SCRATCH_DIRS:
-                    matrix_mod._SCRATCH_DIRS.remove(d)
+            if d is not None:
+                spool.release(d)
         flat = parts_pdf["partial"].to_numpy(dtype=np.float64)
         lf = flat.reshape(-1, fdim, fdim).sum(axis=0) + diag
         return (lf + lf.T) / 2.0

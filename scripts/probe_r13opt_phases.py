@@ -164,7 +164,7 @@ def main() -> None:
                       .repartition(n_part, "dst")
                       .sortWithinPartitions("dst", "src"))
             spool_kernel = energy_mod._make_spool_step_kernel(
-                "x.npy", "sids.npy", 0.05, True, "item_id", "features")
+                "x.npy", 0.05, True, "item_id", "features")
             dump_plan("diffuse_distributed_step", both_p.mapInPandas(
                 spool_kernel, "item_id long, features array<double>"))
         else:

@@ -29,6 +29,7 @@ import pyspark
 os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
 from pyarrowspace_spark.session import get_spark
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
+from pyarrowspace_spark.functions import spool
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as knn_mod
 from pyarrowspace_spark.operators import lambda_index as lam_mod
@@ -60,13 +61,13 @@ lam_sum = float(idx.items.agg({"lambda": "sum"}).collect()[0][0])
 exact0 = knn_mod.EXACT_PATH_MAX_ROWS
 knn_mod.EXACT_PATH_MAX_ROWS = 0          # -> gather tier
 # Both X-ship modes of the gather tier (r11): the shared-scratch mmap
-# default AND the real TorrentBroadcast fallback a no-shared-scratch
-# cluster would use.
-os.environ["SPARK_GRAFT_LF_SHIP"] = "mmap"
+# default (both executor JVMs share this host's scratch) AND the real
+# TorrentBroadcast fallback a no-shared-scratch cluster would use.
 lf_gather = lam_mod.feature_laplacian(items, idx.edges, 24)
-os.environ["SPARK_GRAFT_LF_SHIP"] = "broadcast"
+scratch0 = spool.scratch
+spool.scratch = lambda spark: None
 lf_bcast = lam_mod.feature_laplacian(items, idx.edges, 24)
-del os.environ["SPARK_GRAFT_LF_SHIP"]
+spool.scratch = scratch0
 lam_mod.BROADCAST_GATHER_MAX_ROWS = 0    # -> distributed join tier
 lf_dist = lam_mod.feature_laplacian(items, idx.edges, 24)
 knn_mod.EXACT_PATH_MAX_ROWS = exact0

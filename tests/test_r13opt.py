@@ -5,6 +5,7 @@ replace."""
 import numpy as np
 import pytest
 
+from pyarrowspace_spark.functions import spool
 from pyarrowspace_spark.operators import knn as K
 from pyarrowspace_spark.params import GraphParams
 
@@ -31,7 +32,7 @@ def test_narrow_shuffle_lsh_identical_to_vector_plan(spark, monkeypatch):
     narrow = {(r["src"], r["dst"]): r["dist"]
               for r in K.knn_edges(items, gp, strategy="lsh").collect()}
     assert K.lsh_group_summary() is not None  # narrow spools eagerly
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SHUFFLE", "vector")
+    monkeypatch.setattr(spool, "scratch", lambda spark: None)
     legacy = {(r["src"], r["dst"]): r["dist"]
               for r in K.knn_edges(items, gp, strategy="lsh").collect()}
     assert narrow == legacy and len(narrow) > 0
@@ -50,7 +51,7 @@ def test_narrow_shuffle_skew_guard_identical(spark, monkeypatch):
     monkeypatch.setattr(K, "LSH_BUCKET_MAX", 8)
     narrow = {(r["src"], r["dst"]) for r in K.knn_edges(
         df, gp, strategy="lsh", lsh_bits=4, lsh_bands=4).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SHUFFLE", "vector")
+    monkeypatch.setattr(spool, "scratch", lambda spark: None)
     legacy = {(r["src"], r["dst"]) for r in K.knn_edges(
         df, gp, strategy="lsh", lsh_bits=4, lsh_bands=4).collect()}
     assert narrow == legacy and len(narrow) > 0
@@ -101,7 +102,7 @@ def test_diffuse_spool_plan_matches_driver_and_legacy(spark, monkeypatch):
     assert set(a) == set(b)
     for i in a:
         np.testing.assert_allclose(b[i], a[i], rtol=1e-9)
-    monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_PLAN", "shuffle")
+    monkeypatch.setattr(spool, "scratch", lambda spark: None)
     c = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=3,
                             msg_dtype="float64").collect()}
@@ -169,7 +170,9 @@ def test_diffuse_spool_stream_write_mode_matches(spark, monkeypatch):
     a = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=2).collect()}
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
-    monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_SPOOL_WRITE", "stream")
+    # a multi-host scratch: same root, writers without a shared cache
+    shared = spool.scratch(spark)._replace(single_host=False)
+    monkeypatch.setattr(spool, "scratch", lambda s: shared)
     b = {r["item_id"]: np.array(r["features"])
          for r in E.diffuse(items, edges, eta=0.05, steps=2,
                             msg_dtype="float64").collect()}

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyarrowspace_spark.functions import spool
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.operators import knn as knn_ops
 from pyarrowspace_spark.params import EnergyParams, GraphParams
@@ -181,7 +182,7 @@ def test_diffuse_auto_chunks_under_budget(spark, test0_items_df,
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
     # chunking is legacy-plan machinery; the r13 spool plan never
     # approaches the message-shuffle budget (pinned in test_r13opt.py)
-    monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_PLAN", "shuffle")
+    monkeypatch.setattr(spool, "scratch", lambda spark: None)
     monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES", "64")
     b = E.diffuse(test0_items_df, edges, eta=0.1, steps=2)
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}
@@ -206,7 +207,7 @@ def test_diffuse_chunked_matches_driver_at_sf0001(spark, sf_items,
     got_a = {r["item_id"]: np.array(r["features"]) for r in a.collect()}
     monkeypatch.setattr(E, "DIFFUSE_BROADCAST_MAX_BYTES", 0)
     # pin the legacy plan: feat_chunks is its machinery (see above)
-    monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_PLAN", "shuffle")
+    monkeypatch.setattr(spool, "scratch", lambda spark: None)
     monkeypatch.setenv("SPARK_GRAFT_DIFFUSE_CHUNK_MSG_BYTES", "200000")
     b = E.diffuse(sf_items, edges, eta=0.05, steps=2)
     got_b = {r["item_id"]: np.array(r["features"]) for r in b.collect()}

@@ -11,7 +11,6 @@
 - fp32 message error on a HIGH-DEGREE graph (verdict gap 3): the
   ≈1e-6 bound was pinned only at deg ≤ topk; a star hub of degree 299
   quantifies the deg-scaled bound (sum of deg fp32 messages).
-- worker-visibility probe for auto mmap ship mode (ADVICE r11).
 """
 
 import os
@@ -181,18 +180,6 @@ def test_fp32_messages_high_degree_star(spark):
     hub_bound = 32 * (n - 1) * 2.0 ** -24 + 1e-6
     assert float(rel[0].max()) < hub_bound
     assert float(rel[1:].max()) < 1e-5  # leaves: one message each
-
-
-def test_probe_worker_visible(spark, tmp_path):
-    """Auto ship-mode visibility probe (ADVICE r11): a real shared dir
-    probes True; an unwritable/nonexistent dir probes False without
-    raising."""
-    assert LAM._probe_worker_visible(spark, str(tmp_path)) is True
-    assert LAM._probe_worker_visible(
-        spark, str(tmp_path / "does-not-exist")) is False
-    # no marker corpses left behind
-    assert not [p for p in os.listdir(tmp_path)
-                if p.startswith("pyarrowspace-visprobe-")]
 
 
 def test_synth_tmp_name_unique(tmp_path):

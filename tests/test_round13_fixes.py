@@ -1,14 +1,10 @@
 """Pins for the round-13 fixes:
 
 - λ-gather scan-source spool: `parquet_scan_source` plan whitelist
-  (accept trivial scans/renames, reject anything with compute),
-  `_stream_spool_from_parquet` value parity, and gather-tier parity
-  between the scan-source and collect spool paths (r12 verdict task 6).
+  (accept trivial scans/renames, reject anything with compute) and
+  gather-tier parity between the scan-source and collect spool paths
+  (r12 verdict task 6).
 - fp32 auto-ship UserWarning on first engagement (ADVICE r12).
-- group-readable spool modes by default, world-readable only behind
-  the env opt-in (ADVICE r12).
-- sorted-gather toggle parity (the local sort changes summation order
-  only).
 """
 
 from __future__ import annotations
@@ -74,24 +70,6 @@ def test_parquet_scan_source_whitelist(spark, tmp_path):
         bad.unpersist()
 
 
-def test_stream_spool_matches_source(spark, tmp_path):
-    """The streamed spool holds exactly the source matrix in id-sorted
-    row order (ids here are already 0..n-1, so sorted == original)."""
-    p, X = _write_corpus(spark, tmp_path, n=257, f=6)
-    items = spark.read.parquet(p).select("item_id", "features")
-    src = LAM.parquet_scan_source(items, "item_id", "features")
-    x_path = str(tmp_path / "x.npy")
-    res = LAM._stream_spool_from_parquet(src, 257, 6, np.float64, x_path)
-    assert res is not None
-    s_ids, order = res
-    assert np.array_equal(s_ids, np.arange(257))
-    assert np.array_equal(order, np.arange(257))
-    assert np.array_equal(np.load(x_path), X)
-    # row-count mismatch → None (caller falls back to collect)
-    assert LAM._stream_spool_from_parquet(
-        src, 256, 6, np.float64, str(tmp_path / "x2.npy")) is None
-
-
 def test_gather_scan_source_parity(spark, tmp_path, monkeypatch):
     """Gather tier with the scan-source spool is BITWISE equal to the
     collect spool (same id-sorted storage, same sorted edge scan, same
@@ -130,14 +108,6 @@ def test_fp32_auto_warning_fires_once(spark, test0_items_df, monkeypatch):
         _w.simplefilter("error", UserWarning)
         LAM.feature_laplacian(test0_items_df, edges, 24)
     edges.unpersist()
-
-
-def test_spool_modes_group_readable_default(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_WORLD_READABLE",
-                       raising=False)
-    assert LAM._spool_modes() == (0o750, 0o640)
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_WORLD_READABLE", "1")
-    assert LAM._spool_modes() == (0o755, 0o644)
 
 
 def test_build_with_reused_edges_matches(spark, tmp_path):
@@ -201,22 +171,6 @@ def test_lsh_miss_budget_env_override(monkeypatch):
     assert K.auto_lsh_bands(12) > base
     monkeypatch.setenv("SPARK_GRAFT_LSH_MISS_BUDGET", "3.0")
     assert K.auto_lsh_bands(12) == base
-
-
-def test_gather_sort_toggle_parity(spark, test0_items_df, monkeypatch):
-    """The src-sorted edge scan changes float summation order only:
-    L_F agrees with the unsorted scan to ~1 ulp."""
-    gp = GraphParams(eps=0.05, k=5, topk=3, p=2.0, sigma=0.05)
-    edges = K.knn_edges(test0_items_df, gp, strategy="exact").persist()
-    edges.count()
-    monkeypatch.setattr(K, "EXACT_PATH_MAX_ROWS", 0)
-    monkeypatch.setenv("SPARK_GRAFT_LF_GATHER_SORT", "1")
-    lf_sorted = LAM.feature_laplacian(test0_items_df, edges, 24)
-    monkeypatch.setenv("SPARK_GRAFT_LF_GATHER_SORT", "0")
-    lf_unsorted = LAM.feature_laplacian(test0_items_df, edges, 24)
-    scale = max(float(np.abs(lf_sorted).max()), 1e-30)
-    assert float(np.abs(lf_sorted - lf_unsorted).max()) / scale < 1e-12
-    edges.unpersist()
 
 
 def test_edges_reuse_build_uses_scan_spool(spark, tmp_path, monkeypatch):

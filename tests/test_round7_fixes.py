@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from pyarrowspace_spark.builder import ArrowSpaceBuilder
 from pyarrowspace_spark.functions import matrix as M
+from pyarrowspace_spark.functions import spool
 from pyarrowspace_spark.operators import energy as E
 from pyarrowspace_spark.params import EnergyParams, GraphParams
 
@@ -52,10 +53,10 @@ def test_driver_tier_diffuse_releases_scratch_dirs(spark, test0_items_df):
     from pyarrowspace_spark.operators import knn as KNN
 
     edges = KNN.knn_edges(test0_items_df, GP, strategy="exact")
-    before = list(M._SCRATCH_DIRS)
+    before = list(spool._SCRATCH_DIRS)
     outs = [E.diffuse(test0_items_df, edges, eta=0.05, steps=1)
             for _ in range(3)]
-    assert M._SCRATCH_DIRS == before, (
+    assert spool._SCRATCH_DIRS == before, (
         "driver-tier diffuse leaked scratch parquet dirs")
     # the released frames must still be fully materializable
     for out in outs:
@@ -67,9 +68,9 @@ def test_matrix_to_frame_eager_release_values_survive(spark):
     must still return the exact handed-off matrix afterwards."""
     ids = np.arange(7, dtype=np.int64)
     X = np.arange(21, dtype=np.float64).reshape(7, 3) / 10.0
-    before = list(M._SCRATCH_DIRS)
+    before = list(spool._SCRATCH_DIRS)
     df = M.matrix_to_frame(spark, ids, X, eager_release=True)
-    assert M._SCRATCH_DIRS == before
+    assert spool._SCRATCH_DIRS == before
     rows = {r["item_id"]: r["features"]
             for r in df.orderBy("item_id").collect()}
     for i in range(7):

@@ -30,3 +30,29 @@ def test_usage_snippets_run_in_order(spark):
     # the quickstart actually built both index flavors
     assert ns["idx"].nitems > 0
     assert ns["eidx"].centroids.count() > 0
+
+
+# an env read: os.environ.get("X" / os.environ["X"] / os.getenv("X"),
+# the name possibly on the next line
+_ENV_READ_RX = re.compile(
+    r"""(?:environ\.get|getenv|environ\[)\(?\s*["'](SPARK_GRAFT_\w+)""")
+
+
+def test_env_knob_table_matches_code():
+    """Every SPARK_GRAFT_* variable the engine reads is in USAGE.md's
+    knob table, and the table lists no variable the engine no longer
+    reads — no knob lands undocumented, no deleted knob lingers."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    read = set()
+    for root, _dirs, files in os.walk(os.path.join(repo,
+                                                   "pyarrowspace_spark")):
+        for fn in files:
+            if fn.endswith(".py"):
+                with open(os.path.join(root, fn)) as fh:
+                    read |= set(_ENV_READ_RX.findall(fh.read()))
+    with open(os.path.join(repo, "USAGE.md")) as fh:
+        table = set(re.findall(r"^\| `(SPARK_GRAFT_\w+)`", fh.read(),
+                               flags=re.MULTILINE))
+    assert read, "no env reads found — the scan regex is stale"
+    assert read - table == set(), "read by the engine, not in USAGE.md"
+    assert table - read == set(), "in USAGE.md, no longer read"
